@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftExpressionBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import java.nio.file.{Files, Paths}
@@ -62,6 +62,8 @@ object BenchExtra {
     for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
          if only.forall(_.contains(name))) {
       val l = new QueryListener
+      // earlier queries' (and the warmup's) events must not reach it
+      GraftExpressionBridge.drainListenerBus(spark)
       spark.sparkContext.addSparkListener(l)
       try {
         var execMin = Double.MaxValue
@@ -92,8 +94,8 @@ object BenchExtra {
           val t2 = System.nanoTime()
           execMin = math.min(execMin, (t2 - t1) / 1e9)
         }
-        // listener events are async; give the bus a moment before reading
-        Thread.sleep(300)
+        // listener events are async: wait until the bus has delivered them
+        GraftExpressionBridge.drainListenerBus(spark)
         println(f"$name%-30s $buildS%8.3f $execMin%8.3f ${l.jobs}%5d ${l.stages}%7d ${l.tasks}%6d ${l.stageTimeMs / 1e3}%9.2f")
       } catch {
         case e: Throwable =>

@@ -55,8 +55,12 @@ object Tuning {
     // (driver-held literals), while the compile cost is pure per-query
     // driver latency (measured 1.2 s of q_fingerprint_groups' 1.5 s build,
     // RuleExecutor metrics in OPTIMIZATION_r07.md).
-    c.set("spark.sql.optimizer.excludedRules",
-      env("SPARK_GRAFT_EXCLUDED_RULES",
-        "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation"))
+    // Unioned into whatever the session already excludes, so a host
+    // session's own exclusions survive and repeated calls add nothing.
+    val excluded = "spark.sql.optimizer.excludedRules"
+    def rules(v: String): Seq[String] = v.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val ours = rules(env("SPARK_GRAFT_EXCLUDED_RULES",
+      "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation"))
+    c.set(excluded, (c.getOption(excluded).toSeq.flatMap(rules) ++ ours).distinct.mkString(","))
   }
 }

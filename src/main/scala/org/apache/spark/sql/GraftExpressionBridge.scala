@@ -9,4 +9,10 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object GraftExpressionBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** Block until every listener-bus event posted so far has reached every
+    * listener (`LiveListenerBus.waitUntilEmpty` is `private[spark]`), so
+    * counters read afterwards are complete without a fixed sleep. */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

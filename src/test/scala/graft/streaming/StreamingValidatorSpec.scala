@@ -153,12 +153,13 @@ class StreamingValidatorSpec extends SparkSuite {
       s"100% <other> mass vs a user/assistant baseline must flag drift: ${byWindow("00:00")}")
   }
 
-  test("stateful sequence check caps per-batch buffering; overflow is surfaced and max carries") {
+  test("stateful transcript check caps per-batch buffering; overflow is surfaced and max carries") {
     import spark.implicits._
-    import StreamingValidator.TurnEvent
+    import StreamingValidator.TsTurnEvent
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[TurnEvent]
-    val q = StreamingValidator.statefulSequenceCheck(
+    def turn(conv: String, idx: Int) = TsTurnEvent(conv, idx, None)
+    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[TsTurnEvent]
+    val q = StreamingValidator.statefulTranscriptCheck(
         input.toDS(), idleTimeoutMs = 0, maxEventsPerBatch = 100)
       .writeStream.outputMode(OutputMode.Append)
       .format("memory").queryName("stream_cap")
@@ -166,49 +167,51 @@ class StreamingValidatorSpec extends SparkSuite {
     try {
       // one hot conversation: 1000 clean events in a single backfill batch
       // (10x the cap) plus a clean small conversation as control
-      input.addData(((0 until 1000).map(TurnEvent("hot", _)) :+ TurnEvent("cold", 0)): _*)
+      input.addData(((0 until 1000).map(turn("hot", _)) :+ turn("cold", 0)): _*)
       q.processAllAvailable()
       // next batch: a turn at/below hot's true max (999) must STILL be
       // flagged — the overflow tail's running max fed the state
-      input.addData(TurnEvent("hot", 500), TurnEvent("cold", 1))
+      input.addData(turn("hot", 500), turn("cold", 1))
       q.processAllAvailable()
     } finally q.stop()
     val got = spark.table("stream_cap").collect()
       .map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSet
-    assert(got.contains(("hot", 900, "batch_overflow")),
-      s"900 unchecked events past the 100 cap must surface, got $got")
-    assert(got.contains(("hot", 500, "dup_or_regression")),
-      s"cross-batch regression below the overflow max must flag, got $got")
-    assert(!got.exists(_._1 == "cold"), s"clean conversation must stay clean: $got")
-    assert(got.size == 2, s"no spurious violations: $got")
+    // 900 unchecked events past the 100 cap surface as one overflow row;
+    // the clean conversation stays clean
+    assert(got == Set(("hot", 900, "batch_overflow"), ("hot", 500, "dup_or_regression")),
+      s"overflow surfaced, regression below the overflow max flagged, nothing else: $got")
   }
 
-  test("stateful sequence check: in-batch dups and cross-batch regressions, order-free") {
+  test("stateful transcript check: in-batch dups, cross-batch regressions and gaps, order-free") {
     import spark.implicits._
-    import StreamingValidator.TurnEvent
+    import StreamingValidator.TsTurnEvent
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[TurnEvent]
-    val q = StreamingValidator.statefulSequenceCheck(input.toDS(), idleTimeoutMs = 0)
+    def turn(conv: String, idx: Int) = TsTurnEvent(conv, idx, None)
+    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[TsTurnEvent]
+    val q = StreamingValidator.statefulTranscriptCheck(input.toDS(), idleTimeoutMs = 0)
       .writeStream.outputMode(OutputMode.Append)
       .format("memory").queryName("stream_state")
       .start()
     try {
-      // batch 1: c1 duplicates turn 1 in-batch; c2 is clean; c3's FIRST
-      // contact is a negative turn — it must NOT be flagged (regression:
-      // a -1 "already seen" sentinel used to collide with legal negative
-      // indices). In-batch arrival order carries no signal post-shuffle,
-      // so only equality flags within a batch.
-      input.addData(TurnEvent("c1", 0), TurnEvent("c1", 1), TurnEvent("c1", 1),
-        TurnEvent("c1", 2), TurnEvent("c2", 0), TurnEvent("c2", 5), TurnEvent("c3", -2))
+      // batch 1: c1 duplicates turn 1 in-batch; c2 jumps 0 -> 5; c3's FIRST
+      // contact is a negative turn — a gap (first contact must be 0), never
+      // a dup (regression: a -1 "already seen" sentinel used to collide
+      // with legal negative indices). In-batch arrival order carries no
+      // signal post-shuffle, so only equality flags within a batch.
+      input.addData(turn("c1", 0), turn("c1", 1), turn("c1", 1),
+        turn("c1", 2), turn("c2", 0), turn("c2", 5), turn("c3", -2))
       q.processAllAvailable()
       // batch 2: c2 turn 3 arrives after turn 5 was committed by batch 1
-      // -> cross-batch regression; c3 continues above its negative start
-      input.addData(TurnEvent("c2", 3), TurnEvent("c3", 0))
+      // -> cross-batch regression; c3 continues above its negative start,
+      // skipping -1
+      input.addData(turn("c2", 3), turn("c3", 0))
       q.processAllAvailable()
     } finally q.stop()
     val got = spark.table("stream_state").collect()
-      .map(r => (r.getString(0), r.getInt(1))).toSet
-    assert(got == Set(("c1", 1), ("c2", 3)))
+      .map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSet
+    assert(got == Set(("c1", 1, "dup_or_regression"), ("c2", 5, "seq_gap"),
+      ("c3", -2, "seq_gap"), ("c2", 3, "dup_or_regression"), ("c3", 0, "seq_gap")),
+      s"$got")
   }
 
   test("stateful transcript check: sequence gaps flagged across micro-batches") {

@@ -1,35 +1,16 @@
 package graft.transcript
 
 import graft.SparkSuite
+import graft.PlanShapes.shuffles
 import graft.gen.TranscriptGen
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
-import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.WholeStageCodegenExec
 
 /** Physical-plan regressions: the fused transcript suite must keep its
   * shuffle budget (SURVEY §3 "exactly two shuffle points" for the
   * key/sequence leg) — a silent extra exchange here is a 100-TB problem
   * invisible at test scale. */
 class PlanShapeSpec extends SparkSuite {
-
-  /** Count distinct shuffle exchanges, descending into AQE query stages;
-    * reused exchanges don't count (that's the point of reuse). */
-  private def countShuffles(p: SparkPlan): Int = {
-    val self = p match {
-      case _: ReusedExchangeExec => 0
-      case _: ShuffleExchangeLike => 1
-      case _ => 0
-    }
-    val kids: Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case q: QueryStageExec => Seq(q.plan)
-      case other => other.children
-    }
-    self + kids.map(countShuffles).sum
-  }
-
-  private def shuffles(df: DataFrame): Int = countShuffles(df.queryExecution.executedPlan)
 
   private def hasCodegen(df: DataFrame): Boolean =
     df.queryExecution.executedPlan.collect { case w: WholeStageCodegenExec => w }.nonEmpty
